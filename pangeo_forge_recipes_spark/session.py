@@ -6,7 +6,18 @@ import os
 
 from pyspark.sql import SparkSession
 
-_DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+
+def _default_driver_mem() -> str:
+    """Half of physical memory, capped at 16g: the heap is pre-touched
+    (``-Xms == -Xmx``), so it must fit beside the Python workers."""
+    try:
+        with open("/proc/meminfo") as f:
+            total_kb = next(
+                int(line.split()[1]) for line in f if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError):
+        return "16g"
+    return f"{max(1, min(16 * 1024, total_kb // 2048))}m"
 
 
 def get_spark(
@@ -27,7 +38,8 @@ def get_spark(
       attempts racing on one chunk's put would still double network IO
       (see reference non-idempotence note, ``transforms.py:680-684``).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(os.environ.get(
         "SPARK_GRAFT_SHUFFLE_PARTITIONS", str(max(int(cpus) if cpus.isdigit() else 32, 32))
@@ -52,11 +64,13 @@ def get_spark(
         # oscillate 0.6s..3.4s run to run; pinning the heap (Xms == Xmx +
         # AlwaysPreTouch) removes the jitter at any size. 16g holds the
         # cached sf-scale tables plus 32 concurrent task buffers without
-        # old-gen churn, and pre-touches in ~2s at startup.
-        .config("spark.driver.memory", _DRIVER_MEM)
+        # old-gen churn, and pre-touches in ~2s at startup; smaller hosts
+        # get half their memory, since a pre-touched heap larger than the
+        # host aborts the JVM at startup.
+        .config("spark.driver.memory", driver_mem)
         .config(
             "spark.driver.extraJavaOptions",
-            f"-Xms{_DRIVER_MEM} -XX:+AlwaysPreTouch",
+            f"-Xms{driver_mem} -XX:+AlwaysPreTouch",
         )
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.python.filterPushdown.enabled", "true")

@@ -12,7 +12,7 @@ transforms.py`` (the Beam PTransform library), re-expressed Spark-first:
   metadata pre-pass is the scale-correct equivalent (same semantics:
   the combine kernel errors on any inconsistency either way);
 * the rechunk is the engine's **single data shuffle**:
-  ``groupBy(group_key).applyInPandas`` (reference flags the same GroupByKey
+  ``groupBy(group_key).applyInArrow`` (reference flags the same GroupByKey
   as the one perf hazard, ``transforms.py:414``);
 * combine + region-write are **fused in the same task** — a combined chunk
   is written where it is assembled and never crosses another exchange
@@ -21,12 +21,17 @@ transforms.py`` (the Beam PTransform library), re-expressed Spark-first:
 * writes are **idempotent aligned region puts** of disjoint keys, safe
   under task retries; speculative execution should stay off for the write
   stage (see reference non-idempotence warning for append,
-  ``transforms.py:680-684``).
+  ``transforms.py:680-684``);
+* Python runs once per stage, for the kernels: the schema group key, the
+  concat offsets and the prune filter are JVM expressions over
+  :data:`INDEX_TYPE`, since each Python task pays a fixed worker set-up.
 """
 
 from __future__ import annotations
 
 import hashlib
+import itertools
+import json
 import os
 import pickle
 from collections import OrderedDict
@@ -35,7 +40,7 @@ from typing import Any, Callable, Dict, Iterator, List, Optional, Tuple, Union
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .aggregation import (
@@ -59,7 +64,7 @@ from .openers import open_url, open_with_ndset, open_with_kerchunk, read_schema
 from .patterns import FilePattern, FileType
 from .rechunking import combine_fragments, group_key_to_json, split_fragment
 from .storage import CacheFSSpecTarget, FSSpecTarget
-from .types import CombineOp, Dimension, Index, augment_index_with_start_stop
+from .types import CombineOp, Dimension, Index
 from .zarrio import consolidate_metadata as _consolidate_metadata
 
 MANIFEST_SCHEMA = "index string, url string"
@@ -71,6 +76,28 @@ STATUS_SCHEMA = "group_key string, index string, n_vars int, nbytes bigint"
 # threshold above which the manifest is generated distributed rather than
 # enumerated on the driver
 _DRIVER_MANIFEST_MAX = 100_000
+
+#: Spark type of an ``Index.to_json`` string. Fields are in the sorted-key
+#: order ``Index.to_json`` writes and ``to_json`` drops a null ``dimsize``,
+#: so ``to_json(from_json(index, INDEX_TYPE))`` returns the same bytes.
+INDEX_TYPE = (
+    "array<struct<dim:string,op:string,"
+    "pos:struct<dimsize:bigint,indexed:boolean,value:bigint>>>"
+)
+
+
+def _index_entries() -> Column:
+    return F.from_json(F.col("index"), INDEX_TYPE)
+
+
+def _index_without(dim: Dimension) -> Column:
+    """``Index.to_json`` of the ``index`` column with ``dim`` removed."""
+    return F.to_json(
+        F.filter(
+            _index_entries(),
+            lambda e: (e["dim"] != dim.name) | (e["op"] != dim.operation.name),
+        )
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -86,6 +113,9 @@ def manifest_df(spark: SparkSession, pattern: FilePattern) -> DataFrame:
     n = len(pattern)
     if n <= _DRIVER_MANIFEST_MAX:
         rows = [(idx.to_json(), url) for idx, url in pattern.items()]
+        # from pandas, a JVM local relation; a list of rows would be a
+        # pickled Python RDD, decoded by Python in every stage that scans it
+        rows = pd.DataFrame(rows, columns=["index", "url"])
         return spark.createDataFrame(rows, MANIFEST_SCHEMA)
 
     bc = spark.sparkContext.broadcast(pattern)
@@ -105,18 +135,12 @@ def prune_manifest(df: DataFrame, pattern: FilePattern, nkeep: int = 2) -> DataF
     """Keep the first ``nkeep`` positions of each concat dim — the
     DataFrame-side equivalent of ``FilePattern.prune`` (reference
     ``patterns.py:235-260``), as a filter on the manifest."""
-    concat_dims = set(pattern.concat_dims)
-
-    @F.udf("boolean")
-    def keep(index_json: str) -> bool:
-        idx = Index.from_json(index_json)
-        return all(
-            pos.value < nkeep
-            for dim, pos in idx.items()
-            if dim.name in concat_dims
+    return df.filter(
+        F.forall(
+            _index_entries(),
+            lambda e: ~e["dim"].isin(pattern.concat_dims) | (e["pos"]["value"] < nkeep),
         )
-
-    return df.filter(keep("index"))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -298,32 +322,27 @@ def preprocessed_schemas_df(
     return df.mapInPandas(scan, "index string, schema string")
 
 
-def _combine_level_fn(dim: Dimension) -> Callable[[pd.DataFrame], pd.DataFrame]:
+def _combine_level_fn(dim: Dimension) -> Callable[[tuple, pd.DataFrame], pd.DataFrame]:
     """Combiner for one nesting level: fold a group's schemas along ``dim``,
     injecting the per-position sequence chunks for concat dims exactly as
     the reference's ``CombineXarraySchemas.add_input`` does
-    (``combiners.py:36-51``)."""
+    (``combiners.py:36-51``). The group key is the outer index."""
     concat_name = dim.name if dim.operation == CombineOp.CONCAT else None
 
-    def combine(pdf: pd.DataFrame) -> pd.DataFrame:
+    def combine(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         acc: Optional[XarraySchema] = None
-        outer_json = None
         for idx_json, schema_json in zip(pdf["index"], pdf["schema"]):
-            index = Index.from_json(idx_json)
             schema = schema_from_json(schema_json)
             if concat_name is not None:
                 assert concat_name not in schema["chunks"], (
                     "Concat dim should be unchunked for new input"
                 )
-                position = index[dim].value
+                position = Index.from_json(idx_json)[dim].value
                 schema["chunks"][concat_name] = {
                     position: schema["dims"][concat_name]
                 }
             acc = combine_xarray_schemas(acc, schema, concat_dim=concat_name)
-            if outer_json is None:
-                outer = Index({k: v for k, v in index.items() if k != dim})
-                outer_json = outer.to_json()
-        return pd.DataFrame({"index": [outer_json], "schema": [schema_to_json(acc)]})
+        return pd.DataFrame({"index": [key[0]], "schema": [schema_to_json(acc)]})
 
     return combine
 
@@ -337,31 +356,11 @@ def determine_schema(
     first — the Spark rendition of ``_NestDim`` + ``CombinePerKey``. Schema
     rows are tiny (KBs); these shuffles move metadata, never data."""
     df = schemas_df
-
-    @F.udf("string")
-    def outer_index_json(index_json: str, dim_name: str, dim_op: str) -> str:
-        idx = Index.from_json(index_json)
-        d = Dimension(dim_name, CombineOp[dim_op])
-        return Index({k: v for k, v in idx.items() if k != d}).to_json()
-
-    def _single_arg(fn):
-        # applyInPandas passes (key, pdf) to two-parameter functions; force
-        # the single-argument form
-        def wrapper(pdf):
-            return fn(pdf)
-
-        return wrapper
-
-    cdims = list(combine_dims)
-    while cdims:
-        dim = cdims.pop()
-        fn = _combine_level_fn(dim)
+    for dim in reversed(combine_dims):
         df = (
-            df.withColumn(
-                "outer", outer_index_json("index", F.lit(dim.name), F.lit(dim.operation.name))
-            )
+            df.withColumn("outer", _index_without(dim))
             .groupBy("outer")
-            .applyInPandas(_single_arg(fn), "index string, schema string")
+            .applyInPandas(_combine_level_fn(dim), "index string, schema string")
         )
     rows = df.collect()
     if len(rows) != 1:
@@ -374,34 +373,34 @@ def determine_schema(
 # ---------------------------------------------------------------------------
 
 
-def _sequence_lens(schema: XarraySchema) -> Dict[str, List[int]]:
-    out = {}
-    for dim, posmap in schema["chunks"].items():
-        out[dim] = [posmap[i] for i in range(len(posmap))]
-    return out
-
-
 def index_items(df: DataFrame, schema: XarraySchema, append_offset: int = 0) -> DataFrame:
     """Enrich concat-dim positions with element start offsets + global
     dimsize via prefix sums over the schema's sequence chunks (reference
     ``IndexItems`` + ``augment_index_with_start_stop``,
-    ``transforms.py:304-328``, ``patterns.py:66-82``). The (tiny) prefix-sum
-    table is captured in the closure — the broadcast side input of the
-    reference."""
-    seq_lens = _sequence_lens(schema)
+    ``transforms.py:304-328``, ``patterns.py:66-82``). The prefix sums are
+    computed once per dim on the driver and ride the plan as literals —
+    the broadcast side input of the reference."""
+    starts = {}
+    for dim, posmap in schema["chunks"].items():
+        lens = [posmap[i] for i in range(len(posmap))]
+        starts[dim] = list(itertools.accumulate(lens, initial=append_offset))
 
-    @F.udf("string")
-    def augment(index_json: str) -> str:
-        index = Index.from_json(index_json)
-        new = Index()
-        for dimkey, dimval in index.items():
-            if dimkey.operation == CombineOp.CONCAT:
-                item_lens = seq_lens[dimkey.name]
-                dimval = augment_index_with_start_stop(dimval, item_lens, append_offset)
-            new[dimkey] = dimval
-        return new.to_json()
+    def augment(e: Column) -> Column:
+        out = e
+        for dim, dim_starts in starts.items():
+            # a JSON string literal folds to one array literal; array() over
+            # 10^5 lit() children takes a minute to analyze
+            table = F.from_json(F.lit(json.dumps(dim_starts[:-1])), "array<bigint>")
+            pos = F.struct(
+                F.lit(dim_starts[-1]).cast("bigint").alias("dimsize"),
+                F.lit(True).alias("indexed"),
+                F.element_at(table, (e["pos"]["value"] + 1).cast("int")).alias("value"),
+            )
+            is_dim = (e["op"] == CombineOp.CONCAT.name) & (e["dim"] == dim)
+            out = F.when(is_dim, e.withField("pos", pos)).otherwise(out)
+        return out
 
-    return df.withColumn("index", augment("index"))
+    return df.withColumn("index", F.to_json(F.transform(_index_entries(), augment)))
 
 
 # ---------------------------------------------------------------------------

@@ -1,7 +1,7 @@
 """Isolated per-query timing: noop-sink, best-of-N, warm session.
 
 Usage: python tools/time_queries.py <sf_dir> <query> [query ...]
-Env: TQ_RUNS (default 3), TQ_CPUS (default 32), TQ_SP (default 8 —
+Env: TQ_RUNS (default 3), TQ_CPUS (default: the CPU count), TQ_SP (default 8 —
 matches the bench battery's shuffle width).
 
 Mirrors bench.py's methodology (same session defaults, cached-table
@@ -25,7 +25,7 @@ def main() -> None:
     sf_dir = sys.argv[1]
     names = sys.argv[2:]
     runs = int(os.environ.get("TQ_RUNS", "3"))
-    cpus = os.environ.get("TQ_CPUS", "32")
+    cpus = os.environ.get("TQ_CPUS") or str(os.cpu_count() or 1)
     sp = os.environ.get("TQ_SP", "8")
     spark = get_spark(
         app_name="pfrs-timequeries", master=f"local[{cpus}]",
