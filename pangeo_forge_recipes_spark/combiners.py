@@ -13,9 +13,6 @@ import sys
 from dataclasses import dataclass
 from typing import Callable, Generic, Optional, Tuple, TypeVar
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
 from .aggregation import XarraySchema, combine_xarray_schemas
 from .types import CombineOp, Dimension, Index
 
@@ -59,14 +56,6 @@ MinMaxCountCombineFn = build_reduce_fn(
     merge_op=lambda a, b: (min(a[0], b[0]), max(a[1], b[1]), a[2] + b[2]),
     initializer=(sys.maxsize, -sys.maxsize, 0),
 )
-
-
-def min_max_count(df: DataFrame, col: str) -> Tuple[int, int, int]:
-    """The Spark-native single-pass rendition: one ``agg`` call, one job."""
-    row = df.agg(
-        F.min(col).alias("mn"), F.max(col).alias("mx"), F.count("*").alias("ct")
-    ).collect()[0]
-    return row["mn"], row["mx"], row["ct"]
 
 
 @dataclass

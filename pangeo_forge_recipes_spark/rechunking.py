@@ -32,10 +32,6 @@ def group_key_to_json(key: GroupKey) -> str:
     return json.dumps(list(key), separators=(",", ":"))
 
 
-def group_key_from_json(s: str) -> GroupKey:
-    return tuple((d, i) for d, i in json.loads(s))
-
-
 def split_fragment(
     fragment: Tuple[Index, NDDataset],
     target_chunks: Optional[Dict[str, int]] = None,

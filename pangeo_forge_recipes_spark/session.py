@@ -36,7 +36,14 @@ def get_spark(
       records-per-batch stays low to bound task memory;
     * speculation off — region writes are idempotent, but two speculative
       attempts racing on one chunk's put would still double network IO
-      (see reference non-idempotence note, ``transforms.py:680-684``).
+      (see reference non-idempotence note, ``transforms.py:680-684``);
+    * Python workers forked from :mod:`.pyworker_daemon` — PySpark's worker
+      calls ``importlib.invalidate_caches()`` on every task, which re-parses
+      each cached zip importer's archive directory (``pyspark.zip``, py4j,
+      the Spark jar); the daemon makes that a once-per-worker read. The
+      package must be importable on workers, as the engine's UDF closures
+      already require; if it is not, the daemon fails to launch with a
+      ``ModuleNotFoundError``.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
@@ -79,6 +86,9 @@ def get_spark(
         # executor regardless of host-local timezone
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        .config(
+            "spark.python.daemon.module", "pangeo_forge_recipes_spark.pyworker_daemon"
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
