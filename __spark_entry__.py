@@ -3206,7 +3206,7 @@ def _spill_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (r10 VERDICT ask #1): the zarr round-trip oracle re-run with
     ``rechunk_shuffle="spill"`` forced — decode once, spill raw pieces
     to target-adjacent scratch, metadata-only exchange, range-read on
-    combine (transforms.open_split_spill_df / rechunk_spill_and_store).
+    combine (transforms.open_split_spill_df / rechunk_and_store).
     Chunks are deliberately MISALIGNED with the file grain (4 files x 2
     steps -> chunks of 5) so every target chunk combines fragments from
     multiple sources through the spill wire format. The query asserts

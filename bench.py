@@ -406,61 +406,6 @@ def _bench_zarr_throughput(spark) -> dict:
         )
         out["medium"] = "tmpfs" if use_shm else "disk"
 
-        # stage attribution of the shuffled path (one shot each, warm):
-        # split_only = decode+split+serialize+Arrow-out; +exchange adds
-        # the shuffle write/read (JVM-side agg, payloads never return to
-        # Python); +combine adds the Arrow return + deserialize + concat
-        from pyspark.sql import functions as F
-
-        from pangeo_forge_recipes_spark.transforms import (
-            combine_fragments_df,
-            determine_schema,
-            index_items,
-            manifest_df,
-            open_split_fragments_df,
-            read_schemas_df,
-        )
-
-        sess = spark.newSession()
-        sess.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "16")
-        manifest = manifest_df(sess, pattern)
-        schema = determine_schema(
-            read_schemas_df(manifest, "npz"), pattern.combine_dim_keys
-        )
-        indexed = index_items(manifest, schema)
-        chunks = {"time": 32}
-
-        def _noop(df):
-            df.write.format("noop").mode("overwrite").save()
-
-        stages = {}
-        t0 = time.perf_counter()
-        _noop(
-            open_split_fragments_df(
-                indexed, "npz", target_chunks=chunks, schema=schema
-            )
-        )
-        stages["split_only"] = round(time.perf_counter() - t0, 2)
-        t0 = time.perf_counter()
-        _noop(
-            open_split_fragments_df(
-                indexed, "npz", target_chunks=chunks, schema=schema
-            )
-            .groupBy("group_key")
-            .agg(F.count("*").alias("n"), F.sum(F.length("payload")).alias("b"))
-        )
-        stages["split_plus_exchange"] = round(time.perf_counter() - t0, 2)
-        t0 = time.perf_counter()
-        _noop(
-            combine_fragments_df(
-                open_split_fragments_df(
-                    indexed, "npz", target_chunks=chunks, schema=schema
-                )
-            )
-        )
-        stages["split_exchange_combine"] = round(time.perf_counter() - t0, 2)
-        out["shuffled_stage_breakdown"] = stages
-
         # reference mode on its TARGET workload: chunk-lazy zarr sources
         # (round-5 ask — the npz comparison above is its declared worst
         # case, eager sources paying a full second decode). Same 800 MB

@@ -13,7 +13,13 @@ transforms.py`` (the Beam PTransform library), re-expressed Spark-first:
   the combine kernel errors on any inconsistency either way);
 * the rechunk is the engine's **single data shuffle**:
   ``groupBy(group_key).applyInArrow`` (reference flags the same GroupByKey
-  as the one perf hazard, ``transforms.py:414``);
+  as the one perf hazard, ``transforms.py:414``). Every rechunk mode cuts
+  its sources with one piece generator (open → preprocess → split →
+  explode by variable) and writes through one combine+write body. The
+  payload and spill modes ship each piece as an NDS1 frame
+  (``NDDataset.frame_parts``) into that same ``applyInArrow`` stage,
+  spill putting frames over ``SPILL_INLINE_BYTES`` in a scratch object
+  instead of the exchange;
 * combine + region-write are **fused in the same task** — a combined chunk
   is written where it is assembled and never crosses another exchange
   (Beam gets this via runner fusion; we get it by construction), only tiny
@@ -29,14 +35,14 @@ transforms.py`` (the Beam PTransform library), re-expressed Spark-first:
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import itertools
 import json
 import os
-import pickle
 from collections import OrderedDict
-from dataclasses import dataclass, field
-from typing import Any, Callable, Dict, Iterator, List, Optional, Tuple, Union
+from dataclasses import dataclass
+from typing import Callable, Dict, Iterable, Iterator, List, Optional, Tuple, Union
 
 import numpy as np
 import pandas as pd
@@ -59,7 +65,7 @@ from .dsio import (
     store_dataset_fragment,
     zarr_group_schema,
 )
-from .ndset import NDDataset, Variable
+from .ndset import NDDataset
 from .openers import open_url, open_with_ndset, open_with_kerchunk, read_schema
 from .patterns import FilePattern, FileType
 from .rechunking import combine_fragments, group_key_to_json, split_fragment
@@ -68,7 +74,6 @@ from .types import CombineOp, Dimension, Index
 from .zarrio import consolidate_metadata as _consolidate_metadata
 
 MANIFEST_SCHEMA = "index string, url string"
-FRAGMENT_SCHEMA = "index string, payload binary"
 SPLIT_SCHEMA = "group_key string, index string, payload binary"
 REFS_SCHEMA = "group_key string, index string, url string"
 STATUS_SCHEMA = "group_key string, index string, n_vars int, nbytes bigint"
@@ -182,59 +187,29 @@ def open_urls_with_fsspec(
 # ---------------------------------------------------------------------------
 
 
-def open_with_ndset_df(
-    df: DataFrame,
-    file_type: Union[str, FileType] = FileType.npz,
-    load: bool = True,
-    copy_to_local: bool = False,
+def _open_source(
+    url: str,
+    idx_json: str,
+    file_type: FileType,
     xarray_open_kwargs: Optional[dict] = None,
     preprocess: Optional[Callable[[Index, NDDataset], Tuple[Index, NDDataset]]] = None,
-) -> DataFrame:
-    """Open each manifest row as an NDDataset fragment → ``(index, payload)``
-    rows with pickled payloads. ``preprocess`` is the user-UDF surface
-    (reference preprocessors, ``docs/composition/transforms.md:47-55``) —
-    an arbitrary ``f(Index, NDDataset) -> (Index, NDDataset)``."""
-    ft = FileType(file_type) if isinstance(file_type, str) else file_type
-
-    def open_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_idx, out_payload = [], []
-            for idx_json, url in zip(pdf["index"], pdf["url"]):
-                ds = open_with_ndset(
-                    url,
-                    file_type=ft,
-                    load=load,
-                    copy_to_local=copy_to_local,
-                    xarray_open_kwargs=xarray_open_kwargs,
-                )
-                index = Index.from_json(idx_json)
-                if preprocess is not None:
-                    index, ds = preprocess(index, ds)
-                out_idx.append(index.to_json())
-                out_payload.append(ds.to_bytes())
-            yield pd.DataFrame({"index": out_idx, "payload": out_payload})
-
-    return df.mapInPandas(open_batch, FRAGMENT_SCHEMA)
-
-
-def map_fragments(
-    df: DataFrame,
-    fn: Callable[[Index, NDDataset], Tuple[Index, NDDataset]],
-) -> DataFrame:
-    """Lift ``f(Index, NDDataset) -> (Index, NDDataset)`` over a fragment
-    DataFrame — the ``@recipe_transform`` preprocessor surface (SURVEY
-    §2.10)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            idx_out, payload_out = [], []
-            for idx_json, payload in zip(pdf["index"], pdf["payload"]):
-                index, ds = fn(Index.from_json(idx_json), NDDataset.from_bytes(payload))
-                idx_out.append(index.to_json())
-                payload_out.append(ds.to_bytes())
-            yield pd.DataFrame({"index": idx_out, "payload": payload_out})
-
-    return df.mapInPandas(run, FRAGMENT_SCHEMA)
+    lazy: bool = False,
+) -> Tuple[Index, NDDataset]:
+    """Open one manifest row and apply the user preprocessor (reference
+    preprocessors, ``docs/composition/transforms.md:47-55``). ``lazy``
+    opens chunk-lazy formats (zarr, kerchunk) metadata-only, unless a
+    preprocessor is present: it may touch array DATA (where, coarsen,
+    ...), which the lazy views don't support."""
+    ds = open_with_ndset(
+        url,
+        file_type=file_type,
+        load=not lazy or preprocess is not None,
+        xarray_open_kwargs=xarray_open_kwargs,
+    )
+    index = Index.from_json(idx_json)
+    if preprocess is not None:
+        index, ds = preprocess(index, ds)
+    return index, ds
 
 
 # ---------------------------------------------------------------------------
@@ -268,25 +243,6 @@ def read_schemas_df(
     return df.mapInPandas(scan, "index string, schema string")
 
 
-def schemas_from_fragments(df: DataFrame) -> DataFrame:
-    """``DatasetToSchema`` (reference ``transforms.py:270-273``): schema rows
-    from already-opened fragments."""
-
-    def conv(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "index": pdf["index"],
-                    "schema": [
-                        schema_to_json(dataset_to_schema(NDDataset.from_bytes(p)))
-                        for p in pdf["payload"]
-                    ],
-                }
-            )
-
-    return df.mapInPandas(conv, "index string, schema string")
-
-
 def preprocessed_schemas_df(
     df: DataFrame,
     file_type: Union[str, FileType] = FileType.npz,
@@ -304,17 +260,9 @@ def preprocessed_schemas_df(
         for pdf in batches:
             out_idx, out_schema = [], []
             for idx_json, url in zip(pdf["index"], pdf["url"]):
-                # a user preprocessor may touch array DATA (where,
-                # coarsen, ...), which the chunk-lazy views (r6:
-                # load=False is now REAL for zarr/kerchunk) don't
-                # support — open eagerly when one is present
-                ds = open_with_ndset(
-                    url, file_type=ft, load=preprocess is not None,
-                    xarray_open_kwargs=xarray_open_kwargs,
+                index, ds = _open_source(
+                    url, idx_json, ft, xarray_open_kwargs, preprocess, lazy=True
                 )
-                index = Index.from_json(idx_json)
-                if preprocess is not None:
-                    index, ds = preprocess(index, ds)
                 out_idx.append(index.to_json())
                 out_schema.append(schema_to_json(dataset_to_schema(ds)))
             yield pd.DataFrame({"index": out_idx, "schema": out_schema})
@@ -438,30 +386,99 @@ def _explode_by_variable(sub_idx: Index, sub_ds: NDDataset):
                 yield f"c:{name}", NDDataset({}, {name: var}, {}, dict(var.sizes))
 
 
-def split_fragments_df(
-    df: DataFrame,
-    target_chunks: Optional[Dict[str, int]] = None,
-    schema: Optional[XarraySchema] = None,
-) -> DataFrame:
-    """FlatMap each fragment into per-target-chunk sub-fragments keyed by
-    group key (reference ``split_fragment``)."""
+def _source_pieces(
+    url: str,
+    idx_json: str,
+    file_type: FileType,
+    target_chunks: Optional[Dict[str, int]],
+    schema: Optional[XarraySchema],
+    xarray_open_kwargs: Optional[dict] = None,
+    preprocess: Optional[Callable[[Index, NDDataset], Tuple[Index, NDDataset]]] = None,
+    lazy: bool = False,
+) -> Iterator[Tuple[str, Index, NDDataset]]:
+    """Open → [preprocess] → split → explode one source into its pieces,
+    ``(group_key, sub_index, single_variable_dataset)``: one per
+    intersecting target chunk × owned variable (key = chunk ⊕ variable).
+    Every rechunk path cuts its sources here. Per-variable pieces keep
+    shuffle groups at one-chunk-×-one-var, so task memory is bounded by a
+    single variable's chunk, parallelism multiplies by the variable
+    count, and coordinate payloads travel only from their designated
+    owner (the write-side ownership rules of reference
+    ``writers.py:57-69,110-122`` applied at split time)."""
+    fragment = _open_source(
+        url, idx_json, file_type, xarray_open_kwargs, preprocess, lazy
+    )
+    for gk, (sub_idx, sub_ds) in split_fragment(
+        fragment, target_chunks=target_chunks, schema=schema
+    ):
+        gk_json = group_key_to_json(gk)
+        for suffix, single in _explode_by_variable(sub_idx, sub_ds):
+            yield f"{gk_json}|{suffix}", sub_idx, single
 
-    def split(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for idx_json, payload in zip(pdf["index"], pdf["payload"]):
-                fragment = (Index.from_json(idx_json), NDDataset.from_bytes(payload))
-                keys, idxs, payloads = [], [], []
-                for gk, (sub_idx, sub_ds) in split_fragment(
-                    fragment, target_chunks=target_chunks, schema=schema
-                ):
-                    keys.append(group_key_to_json(gk))
-                    idxs.append(sub_idx.to_json())
-                    payloads.append(sub_ds.to_bytes())
-                yield pd.DataFrame(
-                    {"group_key": keys, "index": idxs, "payload": payloads}
-                )
 
-    return df.mapInPandas(split, SPLIT_SCHEMA)
+#: bytes the int32 offsets of an Arrow ``binary`` column can address — the
+#: split flushes a record batch before its payload buffer passes this
+_ARROW_BINARY_MAX = 2**31 - 1
+
+
+def _arrow_schema(ddl: str) -> "pa.Schema":
+    """The Arrow schema of one of this module's ``"name type, ..."``
+    strings."""
+    import pyarrow as pa
+
+    types = {
+        "string": pa.string(),
+        "binary": pa.binary(),
+        "int": pa.int32(),
+        "bigint": pa.int64(),
+    }
+    return pa.schema([(n, types[t]) for n, t in (f.split() for f in ddl.split(","))])
+
+
+def _frame_batches(
+    rows: Iterable[tuple], ddl: str, max_bytes: int
+) -> Iterator["pa.RecordBatch"]:
+    """Record batches of ``rows``: tuples in ``ddl`` column order whose
+    ``payload`` entry is the list of a piece's NDS1 frame parts
+    (:meth:`NDDataset.frame_parts`). The parts are written straight into
+    one buffer that the payload column is built over, so each payload
+    byte is copied once on its way out of Python (a pandas return would
+    copy it again in the pandas→Arrow conversion). A batch is flushed
+    before its buffer would pass ``max_bytes``."""
+    import pyarrow as pa
+
+    schema = _arrow_schema(ddl)
+    p = schema.get_field_index("payload")
+
+    def batch(cols: List[list], data: bytearray, offsets: List[int]):
+        arrays = [pa.array(col, f.type) for col, f in zip(cols, schema)]
+        arrays[p] = pa.Array.from_buffers(
+            pa.binary(),
+            len(offsets) - 1,
+            [None, pa.py_buffer(np.asarray(offsets, dtype=np.int32)), pa.py_buffer(data)],
+        )
+        return pa.RecordBatch.from_arrays(arrays, schema=schema)
+
+    cols, data, offsets = [[] for _ in schema], bytearray(), [0]
+    for row in rows:
+        size = sum(len(part) for part in row[p])
+        if size > max_bytes:
+            raise ValueError(
+                f"a rechunk piece of {size} bytes is larger than the {max_bytes} "
+                "bytes one Arrow binary value can hold; lower target_chunks "
+                "(or target_shards) so each target chunk of one variable is smaller"
+            )
+        if len(data) + size > max_bytes:
+            yield batch(cols, data, offsets)
+            cols, data, offsets = [[] for _ in schema], bytearray(), [0]
+        for i, value in enumerate(row):
+            if i != p:
+                cols[i].append(value)
+        for part in row[p]:
+            data += part
+        offsets.append(len(data))
+    if len(offsets) > 1:
+        yield batch(cols, data, offsets)
 
 
 def open_split_fragments_df(
@@ -469,100 +486,50 @@ def open_split_fragments_df(
     file_type: Union[str, FileType] = FileType.npz,
     target_chunks: Optional[Dict[str, int]] = None,
     schema: Optional[XarraySchema] = None,
-    load: bool = True,
-    copy_to_local: bool = False,
     xarray_open_kwargs: Optional[dict] = None,
     preprocess: Optional[Callable[[Index, NDDataset], Tuple[Index, NDDataset]]] = None,
-    by_variable: bool = True,
 ) -> DataFrame:
-    """Fused open → [preprocess] → split in ONE Arrow stage. Functionally
-    ``split_fragments_df(open_with_ndset_df(df))``, but the MB-scale
-    fragment payload stays inside a single Python worker pass instead of
-    round-tripping JVM↔Python between stages — at 100 TB those extra
-    crossings are pure wasted bandwidth (Beam gets the same effect from
-    runner fusion; here we fuse structurally).
-
-    ``by_variable=True`` additionally shards each sub-fragment per variable
-    (key = chunk ⊕ variable): shuffle groups shrink from one-chunk-×-ALL-vars
-    to one-chunk-×-one-var, so task memory is bounded by a single variable's
-    chunk, parallelism multiplies by the variable count, and coordinate
-    payloads — which the whole-fragment layout ships redundantly with every
-    fragment — travel only from their designated owner (the write-side
-    ownership rules of reference ``writers.py:57-69,110-122`` applied at
-    split time).
-
-    r13 (guide §4.2): the stage is ``mapInArrow`` and each output batch's
-    payload column is built directly over ONE accumulated data buffer
-    (``pa.Array.from_buffers`` with the NDS1 frame parts written straight
-    into a bytearray) — the pre-r13 pandas return re-copied every payload
-    byte a second time during the pandas→Arrow conversion. Combined with
-    the NDS1 frame, each payload byte now crosses the split stage with
-    exactly one Python-side copy."""
-    import pyarrow as pa
-
+    """Fused open → [preprocess] → split in ONE ``mapInArrow`` stage, one
+    row per :func:`_source_pieces` piece with its NDS1 frame as
+    ``payload``. The MB-scale fragment payload stays inside a single
+    Python worker pass instead of round-tripping JVM↔Python between
+    stages — at 100 TB those extra crossings are pure wasted bandwidth
+    (Beam gets the same effect from runner fusion; here we fuse
+    structurally) — and :func:`_frame_batches` copies each payload byte
+    once on its way out."""
     ft = FileType(file_type) if isinstance(file_type, str) else file_type
 
     def open_split(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        out_schema = pa.schema(
-            [
-                ("group_key", pa.string()),
-                ("index", pa.string()),
-                ("payload", pa.binary()),
-            ]
-        )
         for batch in batches:
-            idx_col = batch.column("index")
-            url_col = batch.column("url")
-            for i in range(batch.num_rows):
-                idx_json = idx_col[i].as_py()
-                url = url_col[i].as_py()
-                ds = open_with_ndset(
-                    url,
-                    file_type=ft,
-                    load=load,
-                    copy_to_local=copy_to_local,
-                    xarray_open_kwargs=xarray_open_kwargs,
+            for idx_json, url in zip(
+                batch.column("index").to_pylist(), batch.column("url").to_pylist()
+            ):
+                pieces = _source_pieces(
+                    url, idx_json, ft, target_chunks, schema, xarray_open_kwargs, preprocess
                 )
-                index = Index.from_json(idx_json)
-                if preprocess is not None:
-                    index, ds = preprocess(index, ds)
-                keys, idxs = [], []
-                data = bytearray()
-                offsets = [0]
-
-                def emit(key: str, idx_str: str, single: NDDataset) -> None:
-                    nonlocal data
-                    keys.append(key)
-                    idxs.append(idx_str)
-                    for part in single.frame_parts():
-                        data += part
-                    offsets.append(len(data))
-
-                for gk, (sub_idx, sub_ds) in split_fragment(
-                    (index, ds), target_chunks=target_chunks, schema=schema
-                ):
-                    gk_json = group_key_to_json(gk)
-                    sub_json = sub_idx.to_json()
-                    if by_variable:
-                        for suffix, single in _explode_by_variable(sub_idx, sub_ds):
-                            emit(f"{gk_json}|{suffix}", sub_json, single)
-                    else:
-                        emit(gk_json, sub_json, sub_ds)
-                payload_arr = pa.Array.from_buffers(
-                    pa.binary(),
-                    len(keys),
-                    [
-                        None,
-                        pa.py_buffer(np.asarray(offsets, dtype=np.int32)),
-                        pa.py_buffer(data),
-                    ],
+                rows = (
+                    (key, sub_idx.to_json(), single.frame_parts())
+                    for key, sub_idx, single in pieces
                 )
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(keys, pa.string()), pa.array(idxs, pa.string()), payload_arr],
-                    schema=out_schema,
-                )
+                yield from _frame_batches(rows, SPLIT_SCHEMA, _ARROW_BINARY_MAX)
 
     return df.mapInArrow(open_split, SPLIT_SCHEMA)
+
+
+def _combine_write(frags: List[Tuple[Index, NDDataset]], store_path: str) -> dict:
+    """Assemble one target chunk from its pieces (reference GroupByKey +
+    ``combine_fragments``, ``transforms.py:406-417``) and write its
+    aligned region in the same task (``StoreDatasetFragments``; Beam
+    fuses them at runtime, we fuse them structurally). Returns the status
+    row without its group key: one unit is one chunk × one owned
+    variable, each byte counted once, on every rechunk path."""
+    index, ds = combine_fragments(None, frags)
+    store_dataset_fragment((index, ds), store_path)
+    return {
+        "index": index.to_json(),
+        "n_vars": len(ds.data_vars),
+        "nbytes": int(sum(v.data.nbytes for v in ds.variables.values())),
+    }
 
 
 def open_split_store_df(
@@ -577,128 +544,74 @@ def open_split_store_df(
     """Zero-shuffle fast path: open → [preprocess] → split → write, all in
     one map stage. Valid only when every split sub-fragment is a complete
     target chunk (``_chunks_aligned_with_files``) — then the groupBy would
-    place exactly one fragment per group and the shuffle would move every
-    byte across the cluster for nothing. ``combine_fragments`` still runs
-    per sub-fragment to keep the validation identical."""
+    place exactly one piece per group and the shuffle would move every
+    byte across the cluster for nothing. Each piece still goes through
+    :func:`_combine_write` to keep the validation identical."""
     ft = FileType(file_type) if isinstance(file_type, str) else file_type
+    columns = _arrow_schema(STATUS_SCHEMA).names
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for idx_json, url in zip(pdf["index"], pdf["url"]):
-                ds = open_with_ndset(
-                    url, file_type=ft, xarray_open_kwargs=xarray_open_kwargs
+                pieces = _source_pieces(
+                    url, idx_json, ft, target_chunks, schema, xarray_open_kwargs, preprocess
                 )
-                index = Index.from_json(idx_json)
-                if preprocess is not None:
-                    index, ds = preprocess(index, ds)
-                keys, idxs, nvars, nbytes = [], [], [], []
-                for gk, sub in split_fragment(
-                    (index, ds), target_chunks=target_chunks, schema=schema
-                ):
-                    out_index, out_ds = combine_fragments(gk, [sub])
-                    gk_json = group_key_to_json(gk)
-                    # same ownership sharding as the shuffled path: unowned
-                    # variables (coords repeated in every source file) are
-                    # neither re-written nor double-counted, and status rows
-                    # mean chunk × owned-variable on both paths
-                    for suffix, single in _explode_by_variable(out_index, out_ds):
-                        store_dataset_fragment((out_index, single), store_path)
-                        keys.append(f"{gk_json}|{suffix}")
-                        idxs.append(out_index.to_json())
-                        nvars.append(len(single.data_vars))
-                        nbytes.append(
-                            int(
-                                sum(
-                                    v.data.nbytes
-                                    for v in single.variables.values()
-                                )
-                            )
-                        )
-                yield pd.DataFrame(
-                    {
-                        "group_key": keys,
-                        "index": idxs,
-                        "n_vars": nvars,
-                        "nbytes": nbytes,
-                    }
-                )
+                statuses = [
+                    {"group_key": key, **_combine_write([(sub_idx, single)], store_path)}
+                    for key, sub_idx, single in pieces
+                ]
+                yield pd.DataFrame(statuses, columns=columns)
 
     return df.mapInPandas(run, STATUS_SCHEMA)
 
 
-def combine_fragments_df(df_split: DataFrame) -> DataFrame:
-    """THE shuffle: co-locate all sub-fragments of one target chunk and
-    reassemble (reference GroupByKey + ``combine_fragments``,
-    ``transforms.py:406-417``). Returns combined ``(index, payload)``
-    fragments (used in tests; production uses the fused
-    :func:`rechunk_and_store`)."""
+def _frames(tbl: "pa.Table") -> Iterator:
+    """Each split row's NDS1 frame: a zero-copy view of ``payload``, or —
+    for a spill row whose ``url`` is set — a range read of exactly that
+    piece from its scratch object."""
+    from .storage import url_range_get
 
-    def combine(pdf: pd.DataFrame) -> pd.DataFrame:
-        frags = [
-            (Index.from_json(i), NDDataset.from_bytes(p))
-            for i, p in zip(pdf["index"], pdf["payload"])
-        ]
-        index, ds = combine_fragments(None, frags)
-        return pd.DataFrame({"index": [index.to_json()], "payload": [ds.to_bytes()]})
-
-    return df_split.groupBy("group_key").applyInPandas(combine, FRAGMENT_SCHEMA)
+    urls = (
+        tbl.column("url").to_pylist()
+        if "url" in tbl.column_names
+        else [""] * tbl.num_rows
+    )
+    for i, (payload, url) in enumerate(zip(tbl.column("payload"), urls)):
+        if url:
+            yield url_range_get(
+                url, tbl.column("offset")[i].as_py(), tbl.column("length")[i].as_py()
+            )
+        else:
+            yield payload.as_buffer()
 
 
 def rechunk_and_store(
     df_split: DataFrame,
     target_store_path: str,
 ) -> DataFrame:
-    """Fused combine+write: each group assembles its target chunk and writes
-    its aligned region in the same task (reference stages
-    ``transforms.py:414`` + ``StoreDatasetFragments``; Beam fuses them at
-    runtime, we fuse them structurally). Only tiny status rows return.
+    """THE shuffle for payload and spill rows: ``groupBy(group_key)
+    .applyInArrow`` co-locates the pieces of one target chunk × variable
+    and :func:`_combine_write` assembles and writes it in the same task
+    (reference stages ``transforms.py:414`` + ``StoreDatasetFragments``).
+    Only tiny status rows return.
 
-    The group crosses JVM→Python as ARROW data (``applyInArrow``), not
-    pandas: the MB-scale payload cells deserialize straight from the
-    Arrow buffers (``BinaryScalar.as_buffer()`` — no per-cell ``bytes``
-    materialization and no pandas block consolidation). r13 (guide
-    §4.2): with the NDS1 raw frame (``NDDataset.to_bytes``) the
-    deserialization is a ZERO-COPY ``np.frombuffer`` view over the Arrow
-    buffer — the only combine-side copy left per payload byte is the
-    assembly into the target chunk, where pre-r13 the pickle load
-    re-allocated every fragment first (one extra full copy of the
-    corpus, and the dominant combine cost when host page faults are
-    slow)."""
+    The group crosses JVM→Python as ARROW data, not pandas: each frame
+    deserializes (``NDDataset.from_bytes``) as ZERO-COPY ``np.frombuffer``
+    views over the Arrow buffer — no per-cell ``bytes``, no pandas block
+    consolidation — so the only combine-side copy left per payload byte
+    is the assembly into the target chunk."""
     import pyarrow as pa
 
-    def combine_write(tbl: "pa.Table") -> "pa.Table":
-        idx_col = tbl.column("index")
-        payload_col = tbl.column("payload")
-        frags = []
-        for chunk_i, chunk_p in zip(idx_col.chunks, payload_col.chunks):
-            for i in range(len(chunk_i)):
-                frags.append(
-                    (
-                        Index.from_json(chunk_i[i].as_py()),
-                        NDDataset.from_bytes(chunk_p[i].as_buffer()),
-                    )
-                )
-        index, ds = combine_fragments(None, frags)
-        store_dataset_fragment((index, ds), target_store_path)
-        nbytes = int(sum(v.data.nbytes for v in ds.variables.values()))
-        return pa.table(
-            {
-                "group_key": [tbl.column("group_key")[0].as_py()],
-                "index": [index.to_json()],
-                "n_vars": [len(ds.data_vars)],
-                "nbytes": [nbytes],
-            },
-            schema=pa.schema(
-                [
-                    ("group_key", pa.string()),
-                    ("index", pa.string()),
-                    ("n_vars", pa.int32()),
-                    ("nbytes", pa.int64()),
-                ]
-            ),
-        )
+    def write_group(tbl: "pa.Table") -> "pa.Table":
+        frags = [
+            (Index.from_json(idx_json), NDDataset.from_bytes(frame))
+            for idx_json, frame in zip(tbl.column("index").to_pylist(), _frames(tbl))
+        ]
+        status = _combine_write(frags, target_store_path)
+        status["group_key"] = tbl.column("group_key")[0].as_py()
+        return pa.Table.from_pylist([status], schema=_arrow_schema(STATUS_SCHEMA))
 
-    return df_split.groupBy("group_key").applyInArrow(combine_write, STATUS_SCHEMA)
+    return df_split.groupBy("group_key").applyInArrow(write_group, STATUS_SCHEMA)
 
 
 def open_split_refs_df(
@@ -712,9 +625,9 @@ def open_split_refs_df(
     """Reference split: the SAME group keys as
     :func:`open_split_fragments_df`, but each row carries only
     ``(group_key, file_index, url)`` — ~200 bytes — instead of the MB-scale
-    fragment payload. Sources are opened ``load=False`` so chunk-lazy
-    formats (zarr, kerchunk) pay metadata cost only; eager formats read
-    once without shipping. The write side (:func:`rechunk_refs_and_store`)
+    fragment payload. Sources are opened lazily so chunk-lazy formats
+    (zarr, kerchunk) pay metadata cost only; eager formats read once
+    without shipping. The write side (:func:`rechunk_refs_and_store`)
     re-opens each source and extracts its pieces directly, so the
     exchange moves O(#fragments) metadata instead of O(data) bytes — at
     100 TB that removes the double shuffle-disk write/read of the whole
@@ -726,24 +639,13 @@ def open_split_refs_df(
         for pdf in batches:
             keys, idxs, urls = [], [], []
             for idx_json, url in zip(pdf["index"], pdf["url"]):
-                # a user preprocessor may touch array DATA (where,
-                # coarsen, ...), which lazy views don't support — open
-                # eagerly when one is present; metadata-only otherwise
-                ds = open_with_ndset(
-                    url, file_type=ft, load=preprocess is not None,
-                    xarray_open_kwargs=xarray_open_kwargs,
-                )
-                index = Index.from_json(idx_json)
-                if preprocess is not None:
-                    index, ds = preprocess(index, ds)
-                for gk, (sub_idx, sub_ds) in split_fragment(
-                    (index, ds), target_chunks=target_chunks, schema=schema
+                for key, _, _ in _source_pieces(
+                    url, idx_json, ft, target_chunks, schema,
+                    xarray_open_kwargs, preprocess, lazy=True,
                 ):
-                    gk_json = group_key_to_json(gk)
-                    for suffix, _single in _explode_by_variable(sub_idx, sub_ds):
-                        keys.append(f"{gk_json}|{suffix}")
-                        idxs.append(idx_json)
-                        urls.append(url)
+                    keys.append(key)
+                    idxs.append(idx_json)
+                    urls.append(url)
             yield pd.DataFrame({"group_key": keys, "index": idxs, "url": urls})
 
     return df.mapInPandas(split_keys, REFS_SCHEMA)
@@ -770,10 +672,10 @@ def rechunk_refs_and_store(
 ) -> DataFrame:
     """Combine+write for the reference shuffle: each group re-opens its
     source files (process-level LRU), re-runs the deterministic
-    :func:`split_fragment`, keeps only its own pieces, then assembles and
-    writes exactly like :func:`rechunk_and_store`. Determinism of the
-    split (pure function of index ⊕ chunk grid) is what makes shuffling
-    references instead of payloads sound."""
+    :func:`_source_pieces`, keeps only its own pieces, then assembles and
+    writes through :func:`_combine_write` like :func:`rechunk_and_store`.
+    Determinism of the split (pure function of index ⊕ chunk grid) is
+    what makes shuffling references instead of payloads sound."""
     ft = FileType(file_type) if isinstance(file_type, str) else file_type
     # distinct token per pipeline run: reused Python workers keep the
     # module-level cache alive across jobs, and (url, idx_json) alone
@@ -782,58 +684,39 @@ def rechunk_refs_and_store(
     run_token = os.urandom(8).hex()
 
     def open_pieces(url: str, idx_json: str) -> Dict[str, tuple]:
-        """Open + preprocess + split + explode ONCE per source file,
-        cached as ``{full_group_key: (sub_index, single_var_dataset)}``
-        — each group takes its piece by exact key lookup, so there is
-        no group-key re-parsing (variable names may contain '|') and
-        the per-file split work is O(pieces), not O(groups × pieces)."""
+        """Every piece of one source, cached as ``{full_group_key:
+        (sub_index, single_var_dataset)}`` — each group takes its piece by
+        exact key lookup, so there is no group-key re-parsing (variable
+        names may contain '|') and the per-file split work is O(pieces),
+        not O(groups × pieces)."""
         key = (run_token, url, idx_json)
         hit = _REFS_OPEN_CACHE.get(key)
         if hit is not None:
             _REFS_OPEN_CACHE.move_to_end(key)
             return hit
-        # load=False: chunk-lazy formats (zarr, kerchunk) open metadata
-        # only and each group's combine materializes a chunk-granular
-        # range read of EXACTLY its piece — the whole point of the
-        # reference shuffle at 100 TB. Eager formats (npz, netcdf3, ...)
-        # ignore the flag and read once per file as before. A user
-        # preprocessor may touch array DATA, which lazy views don't
-        # support — open eagerly when one is present.
-        ds = open_with_ndset(
-            url,
-            file_type=ft,
-            load=preprocess is not None,
-            xarray_open_kwargs=xarray_open_kwargs,
-        )
-        index = Index.from_json(idx_json)
-        if preprocess is not None:
-            index, ds = preprocess(index, ds)
-        pieces: Dict[str, tuple] = {}
-        for gk, (sub_idx, sub_ds) in split_fragment(
-            (index, ds), target_chunks=target_chunks, schema=schema
-        ):
-            gk_json = group_key_to_json(gk)
-            for suffix, single in _explode_by_variable(sub_idx, sub_ds):
-                pieces[f"{gk_json}|{suffix}"] = (sub_idx, single)
+        # lazy: chunk-lazy formats (zarr, kerchunk) open metadata only
+        # and each group's combine materializes a chunk-granular range
+        # read of EXACTLY its piece — the whole point of the reference
+        # shuffle at 100 TB. Eager formats (npz, netcdf3, ...) read once
+        # per file as before.
+        pieces = {
+            gk: (sub_idx, single)
+            for gk, sub_idx, single in _source_pieces(
+                url, idx_json, ft, target_chunks, schema,
+                xarray_open_kwargs, preprocess, lazy=True,
+            )
+        }
         _REFS_OPEN_CACHE[key] = pieces
         while len(_REFS_OPEN_CACHE) > _REFS_OPEN_CACHE_CAP:
             _REFS_OPEN_CACHE.popitem(last=False)
         return pieces
 
-    def combine_write(gk_full: str, rows: List[Tuple[str, str]]) -> dict:
+    def write_group(gk_full: str, rows: List[Tuple[str, str]]) -> dict:
         # the split is deterministic, so every shuffled reference MUST
         # resolve to a piece — a KeyError here means source files changed
         # between the split and write stages
         frags = [open_pieces(url, idx_json)[gk_full] for idx_json, url in rows]
-        index, ds = combine_fragments(None, frags)
-        store_dataset_fragment((index, ds), target_store_path)
-        nbytes = int(sum(v.data.nbytes for v in ds.variables.values()))
-        return {
-            "group_key": gk_full,
-            "index": index.to_json(),
-            "n_vars": len(ds.data_vars),
-            "nbytes": nbytes,
-        }
+        return {"group_key": gk_full, **_combine_write(frags, target_store_path)}
 
     # range-partition + in-partition sort instead of a hash groupBy: all
     # suffixes of one chunk — and lexicographically adjacent chunks, which
@@ -851,11 +734,11 @@ def rechunk_refs_and_store(
             ):
                 if gk != cur_key:
                     if cur_key is not None:
-                        done.append(combine_write(cur_key, cur_rows))
+                        done.append(write_group(cur_key, cur_rows))
                     cur_key, cur_rows = gk, []
                 cur_rows.append((idx_json, url))
         if cur_key is not None:
-            done.append(combine_write(cur_key, cur_rows))
+            done.append(write_group(cur_key, cur_rows))
         if done:
             yield pd.DataFrame(done)
 
@@ -874,16 +757,13 @@ def rechunk_refs_and_store(
 # Python→JVM, the shuffle, and JVM→Python — measured on the 800 MB
 # fixture the JVM↔Python transport IS the tax (python-side pickling is
 # <10% of it). Spill mode decodes each source ONCE, writes each spilled
-# piece's raw C-order bytes to a scratch object next to the target,
-# shuffles O(#fragments) metadata rows, and write tasks range-read
-# exactly their pieces — the reference-mode exchange pattern, available
-# to formats that cannot byte-range-serve their own chunks.)
+# piece's NDS1 frame to a scratch object next to the target, shuffles
+# O(#fragments) metadata rows, and write tasks range-read exactly their
+# pieces — the reference-mode exchange pattern, available to formats
+# that cannot byte-range-serve their own chunks.)
 # ---------------------------------------------------------------------------
 
-SPILL_SCHEMA = (
-    "group_key string, index string, meta binary, payload binary, "
-    "url string, offset bigint, length bigint"
-)
+SPILL_SCHEMA = SPLIT_SCHEMA + ", url string, offset bigint, length bigint"
 
 #: pieces at or below this many bytes ride the shuffle inline (coords,
 #: tiny edge chunks) — a scratch round-trip per 100-byte coordinate
@@ -891,38 +771,31 @@ SPILL_SCHEMA = (
 SPILL_INLINE_BYTES = 1 << 20
 
 
-def _spill_meta(single: NDDataset) -> Tuple[dict, "np.ndarray"]:
-    """(reconstruction meta, array) for a single-variable dataset — the
-    skeleton that rides the metadata shuffle while the array bytes sit
-    in scratch."""
-    if single.data_vars:
-        role, (name, var) = "d", next(iter(single.data_vars.items()))
-    else:
-        role, (name, var) = "c", next(iter(single.coords.items()))
-    data = np.ascontiguousarray(var.data)
-    meta = {
-        "role": role,
-        "name": name,
-        "dims": tuple(var.dims),
-        "attrs": dict(var.attrs),
-        "encoding": dict(var.encoding),
-        "dtype": data.dtype.str,
-        "shape": data.shape,
-        "sizes": dict(var.sizes),
-    }
-    return meta, data
+def _spill_rows(
+    pieces: Iterator[Tuple[str, Index, NDDataset]], scratch_url: str, inline_bytes: int
+) -> Iterator[tuple]:
+    """:data:`SPILL_SCHEMA` rows of one source's pieces. A frame over
+    ``inline_bytes`` is appended to the source's scratch object and its
+    row points at it (``url``, ``offset``, ``length``; empty
+    ``payload``); a smaller one rides inline in ``payload``. The scratch
+    object is opened at the first spilled frame and completed when the
+    pieces run out (a failed split aborts it)."""
+    from .storage import open_output_stream
 
-
-def _unspill(meta: dict, buf) -> NDDataset:
-    """Rebuild the single-variable dataset from its meta + raw bytes
-    (zero-copy view over the fetched buffer)."""
-    arr = np.frombuffer(buf, dtype=np.dtype(meta["dtype"])).reshape(
-        meta["shape"]
-    )
-    var = Variable(meta["dims"], arr, dict(meta["attrs"]), dict(meta["encoding"]))
-    if meta["role"] == "d":
-        return NDDataset({meta["name"]: var}, {}, {}, dict(meta["sizes"]))
-    return NDDataset({}, {meta["name"]: var}, {}, dict(meta["sizes"]))
+    with contextlib.ExitStack() as stack:
+        out, pos = None, 0
+        for key, sub_idx, single in pieces:
+            parts = single.frame_parts()
+            size = sum(len(part) for part in parts)
+            if size <= inline_bytes:
+                yield key, sub_idx.to_json(), parts, "", -1, -1
+                continue
+            if out is None:
+                out = stack.enter_context(open_output_stream(scratch_url))
+            for part in parts:
+                out.write(part)
+            yield key, sub_idx.to_json(), [], scratch_url, pos, size
+            pos += size
 
 
 def open_split_spill_df(
@@ -934,111 +807,33 @@ def open_split_spill_df(
     xarray_open_kwargs: Optional[dict] = None,
     preprocess: Optional[Callable[[Index, NDDataset], Tuple[Index, NDDataset]]] = None,
 ) -> DataFrame:
-    """Open → [preprocess] → split → SPILL: each source file decodes
-    exactly once; every owned piece's raw bytes append to ONE scratch
-    object per source (keyed by the source's index, so task retries
-    rewrite the same object — idempotent), and the emitted rows carry
-    only ``(group_key, index, meta, scratch_url, offset, length)``.
-    Pieces ≤ :data:`SPILL_INLINE_BYTES` ship inline instead."""
+    """Open → [preprocess] → split → SPILL, in one ``mapInArrow`` stage
+    built like :func:`open_split_fragments_df`: each source file decodes
+    exactly once, and every piece over :data:`SPILL_INLINE_BYTES` appends
+    its NDS1 frame to ONE scratch object per source (keyed by the
+    source's index, so task retries rewrite the same object —
+    idempotent). Those rows carry only ``(group_key, index, url, offset,
+    length)``; :func:`rechunk_and_store` range-reads them back."""
     ft = FileType(file_type) if isinstance(file_type, str) else file_type
 
-    def split_spill(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .storage import open_output_stream
-
-        for pdf in batches:
-            for idx_json, url in zip(pdf["index"], pdf["url"]):
-                ds = open_with_ndset(
-                    url, file_type=ft, xarray_open_kwargs=xarray_open_kwargs
-                )
-                index = Index.from_json(idx_json)
-                if preprocess is not None:
-                    index, ds = preprocess(index, ds)
-                rows = {
-                    "group_key": [],
-                    "index": [],
-                    "meta": [],
-                    "payload": [],
-                    "url": [],
-                    "offset": [],
-                    "length": [],
-                }
+    def split_spill(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        for batch in batches:
+            for idx_json, url in zip(
+                batch.column("index").to_pylist(), batch.column("url").to_pylist()
+            ):
                 scratch_url = (
                     scratch_root.rstrip("/")
                     + "/spill-"
                     + hashlib.md5(idx_json.encode()).hexdigest()
                     + ".raw"
                 )
-                spilled: List[Tuple[bytes]] = []
-                pos = 0
-                for gk, (sub_idx, sub_ds) in split_fragment(
-                    (index, ds), target_chunks=target_chunks, schema=schema
-                ):
-                    gk_json = group_key_to_json(gk)
-                    for suffix, single in _explode_by_variable(sub_idx, sub_ds):
-                        rows["group_key"].append(f"{gk_json}|{suffix}")
-                        rows["index"].append(sub_idx.to_json())
-                        meta, data = _spill_meta(single)
-                        raw = data.tobytes()
-                        rows["meta"].append(pickle.dumps(meta, protocol=5))
-                        if len(raw) <= SPILL_INLINE_BYTES:
-                            rows["payload"].append(raw)
-                            rows["url"].append("")
-                            rows["offset"].append(-1)
-                            rows["length"].append(-1)
-                        else:
-                            spilled.append(raw)
-                            rows["payload"].append(b"")
-                            rows["url"].append(scratch_url)
-                            rows["offset"].append(pos)
-                            rows["length"].append(len(raw))
-                            pos += len(raw)
-                if spilled:
-                    with open_output_stream(scratch_url) as f:
-                        for raw in spilled:
-                            f.write(raw)
-                yield pd.DataFrame(rows)
+                pieces = _source_pieces(
+                    url, idx_json, ft, target_chunks, schema, xarray_open_kwargs, preprocess
+                )
+                rows = _spill_rows(pieces, scratch_url, SPILL_INLINE_BYTES)
+                yield from _frame_batches(rows, SPILL_SCHEMA, _ARROW_BINARY_MAX)
 
-    return df.mapInPandas(split_spill, SPILL_SCHEMA)
-
-
-def rechunk_spill_and_store(
-    df_spill: DataFrame,
-    target_store_path: str,
-) -> DataFrame:
-    """Combine+write for the spill shuffle: each group range-reads its
-    pieces from scratch (O(its bytes), raw dtype — zero parse), rebuilds
-    the sub-fragments, and assembles/writes exactly like
-    :func:`rechunk_and_store`. The corpus never rides the Spark shuffle
-    and never crosses Python↔JVM."""
-
-    def combine(pdf: pd.DataFrame) -> pd.DataFrame:
-        from .storage import url_range_get
-
-        frags = []
-        for idx_json, meta_b, payload, url, off, length in zip(
-            pdf["index"],
-            pdf["meta"],
-            pdf["payload"],
-            pdf["url"],
-            pdf["offset"],
-            pdf["length"],
-        ):
-            meta = pickle.loads(meta_b)
-            buf = payload if not url else url_range_get(url, int(off), int(length))
-            frags.append((Index.from_json(idx_json), _unspill(meta, buf)))
-        index, ds = combine_fragments(None, frags)
-        store_dataset_fragment((index, ds), target_store_path)
-        nbytes = int(sum(v.data.nbytes for v in ds.variables.values()))
-        return pd.DataFrame(
-            {
-                "group_key": [pdf["group_key"].iloc[0]],
-                "index": [index.to_json()],
-                "n_vars": [len(ds.data_vars)],
-                "nbytes": [nbytes],
-            }
-        )
-
-    return df_spill.groupBy("group_key").applyInPandas(combine, STATUS_SCHEMA)
+    return df.mapInArrow(split_spill, SPILL_SCHEMA)
 
 
 def _cleanup_scratch(scratch_root: str) -> None:
@@ -1174,11 +969,12 @@ def store_to_zarr(
     their source files directly (exchange volume drops from O(data) to
     O(#fragments); sources are read a second time, but only the needed
     pieces for chunk-lazy formats). ``"spill"`` decodes each source
-    once, writes every spilled piece's raw bytes to a scratch object
-    next to the target, ships metadata rows, and write tasks
-    range-read exactly their pieces (one extra transient write+read of
-    the corpus on target-adjacent storage; scratch removed when the
-    run completes). At 100 TB payload mode is the one that does NOT
+    once, writes the NDS1 frame of every piece over
+    ``SPILL_INLINE_BYTES`` to a scratch object next to the target,
+    ships metadata rows (smaller pieces ride inline), and the payload
+    mode's ``applyInArrow`` combine+write range-reads exactly its
+    pieces (one extra transient write+read of the corpus on
+    target-adjacent storage; scratch removed when the run completes). At 100 TB payload mode is the one that does NOT
     scale: it writes+reads the entire corpus through shuffle storage
     AND crosses it Python↔JVM twice (measured: the transport is the
     whole 2-3× tax; python-side pickling is <10% of it), while
@@ -1302,17 +1098,16 @@ def store_to_zarr(
             xarray_open_kwargs=xarray_open_kwargs,
         )
     elif shuffled and rechunk_shuffle == "spill":
-        scratch_root = store_path.rstrip("/") + ".spill"
-        spill = open_split_spill_df(
+        split = open_split_spill_df(
             indexed,
-            scratch_root,
+            store_path.rstrip("/") + ".spill",
             file_type,
             target_chunks=write_chunks,
             schema=schema,
             preprocess=preprocess,
             xarray_open_kwargs=xarray_open_kwargs,
         )
-        statuses = rechunk_spill_and_store(spill, store_path)
+        statuses = rechunk_and_store(split, store_path)
     elif shuffled:
         split = open_split_fragments_df(
             indexed,

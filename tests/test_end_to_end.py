@@ -715,15 +715,15 @@ def test_kerchunk_multi_dim_single_axis_kernel_still_raises(tmp_path):
 
 
 def test_spill_shuffle_scratch_path(spark, tmp_path, monkeypatch):
-    """Force every piece through scratch (inline threshold 0): raw
-    bytes land in one scratch object per source, the exchange carries
+    """Force every piece through scratch (inline threshold 0): NDS1
+    frames land in one scratch object per source, the exchange carries
     metadata only, the store round-trips exactly, and scratch is
     removed after the run."""
     import pangeo_forge_recipes_spark.transforms as T
 
     monkeypatch.setattr(T, "SPILL_INLINE_BYTES", 0)
     seen = {}
-    real = T.rechunk_spill_and_store
+    real = T.rechunk_and_store
 
     def spy(df_spill, store_path):
         # materialize the split rows once to inspect what the shuffle
@@ -737,7 +737,7 @@ def test_spill_shuffle_scratch_path(spark, tmp_path, monkeypatch):
             store_path,
         )
 
-    monkeypatch.setattr(T, "rechunk_spill_and_store", spy)
+    monkeypatch.setattr(T, "rechunk_and_store", spy)
     ds = make_ds(nt=6)
     paths = split_ds_into_files(ds, str(tmp_path), items_per_file=2)
     pattern = pattern_from_file_sequence(
@@ -787,13 +787,12 @@ def test_spill_shuffle_inline_small_pieces(spark, tmp_path):
 
 
 def test_spill_wire_roundtrip_dtypes():
-    """_spill_meta/_unspill preserve dims/attrs/encoding and values
-    across dtypes incl. byte-order variants, datetimes and bools (the
-    raw-bytes wire that replaces pickle on the spill shuffle)."""
+    """The NDS1 frame a spilled piece is written as preserves
+    dims/attrs/encoding and values across dtypes incl. byte-order
+    variants, datetimes and bools."""
     import numpy as np
 
     from pangeo_forge_recipes_spark.ndset import NDDataset, Variable
-    from pangeo_forge_recipes_spark.transforms import _spill_meta, _unspill
 
     cases = [
         ("d", np.arange(24, dtype="<f8").reshape(2, 3, 4)),
@@ -810,8 +809,7 @@ def test_spill_wire_roundtrip_dtypes():
             if role == "d"
             else NDDataset({}, {"v": var}, {}, dict(var.sizes))
         )
-        meta, data = _spill_meta(single)
-        back = _unspill(meta, data.tobytes())
+        back = NDDataset.from_bytes(b"".join(single.frame_parts()))
         got = (back.data_vars if role == "d" else back.coords)["v"]
         assert got.dims == dims
         np.testing.assert_array_equal(np.asarray(got.data), np.asarray(arr))

@@ -195,9 +195,9 @@ def _seq(seq) -> list:
 
 
 def _plans_since(spark, seen: set) -> list:
-    """``(node names, {python node id: its stage's boundary node id})`` for
-    every SQL execution not in ``seen``. A stage's boundary is the nearest
-    Exchange above a node, or the plan root."""
+    """``(node names, {python node id: its stage's boundary node id}, plan
+    text)`` for every SQL execution not in ``seen``. A stage's boundary is
+    the nearest Exchange above a node, or the plan root."""
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     store = spark._jsparkSession.sharedState().statusStore()
     out = []
@@ -215,7 +215,9 @@ def _plans_since(spark, seen: set) -> list:
             while up is not None and nodes[up].name() != "Exchange":
                 up = parent.get(up)
             stage_of[nid] = up
-        out.append(([n.name() for n in nodes.values()], stage_of))
+        out.append(
+            ([n.name() for n in nodes.values()], stage_of, ex.physicalPlanDescription())
+        )
     return out
 
 
@@ -224,10 +226,11 @@ def _plans_since(spark, seen: set) -> list:
     [
         ({"time": 3}, "payload", None),
         ({"time": 3}, "reference", None),
+        ({"time": 3}, "spill", None),
         ({"time": 3}, "payload", 3),
         ({"time": 1}, "payload", None),
     ],
-    ids=["payload", "reference", "payload-prune", "aligned"],
+    ids=["payload", "reference", "spill", "payload-prune", "aligned"],
 )
 def test_one_python_node_per_stage(
     spark, concat_merge, tmp_path, target_chunks, rechunk_shuffle, prune
@@ -250,7 +253,7 @@ def test_one_python_node_per_stage(
     plans = _plans_since(spark, seen)
     assert plans
     n_python = 0
-    for names, stage_of in plans:
+    for names, stage_of, _ in plans:
         assert not {"BatchEvalPython", "ArrowEvalPython"} & set(names), names
         assert not any("ExistingRDD" in n for n in names), names  # a Python RDD
         per_stage = defaultdict(int)
@@ -261,3 +264,9 @@ def test_one_python_node_per_stage(
     # schema: the header scan + one combine per level; data: split and
     # combine+write, or one fused stage on the zero-shuffle path
     assert n_python == 3 + (2 if result.shuffled else 1)
+    if rechunk_shuffle == "spill":
+        # spill writes through the payload path's Arrow grouped map, and
+        # its exchange carries NDS1 frames and scratch pointers only
+        (text,) = [text for _, _, text in plans if "group_key#" in text]
+        assert "FlatMapGroupsInArrow" in text and "FlatMapGroupsInPandas" not in text
+        assert "url#" in text and "meta#" not in text
